@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.graph import symmetrize_partitioned, vertices
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import regime, superstep_checkpoint
 from combblas_spark.operators.semiring import SELECT2ND_MIN
 from combblas_spark.operators.spmv import spmv
 
@@ -36,8 +36,8 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
     metrics: list | None = None,
-    broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
+    broadcast_max_vertices: int | None = None,
+    small_vector_threshold: int | None = None,
     runner=None,
     initial_labels: DataFrame | None = None,
     assume_symmetric: bool = False,
@@ -76,9 +76,7 @@ def connected_components(
     # without the persist the union+distinct runs twice (count job +
     # init-checkpoint job)
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    n_est = verts.count()
-    can_broadcast = n_est <= broadcast_max_vertices
-    small_vector = n_est <= small_vector_threshold
+    rg = regime(verts.count(), broadcast_max_vertices, small_vector_threshold)
     # Edge partitioning per regime, mirroring pagerank.py:
     #  broadcast regime: partition by dst = the SpMV AGGREGATION key —
     #    the broadcast join preserves it, so the min-neighbor agg needs
@@ -88,7 +86,7 @@ def connected_components(
     #    dst exchange is then the ONE edge-sized move per superstep.
     #    (dst partitioning here would pay BOTH: a join shuffle by src
     #    AND the agg exchange — measured 2x superstep cost at RMAT-22.)
-    part_key = "dst" if can_broadcast else "src"
+    part_key = "dst" if rg.broadcast else "src"
     if assume_symmetric:
         sym = edges.select("src", "dst")
         if edge_layout != part_key:
@@ -115,12 +113,12 @@ def connected_components(
             )
         else:
             f = verts.select("id", F.col("id").alias("val"))
-        f = f.coalesce(1) if small_vector else f.repartition(shuffle_n, "id")
+        f = rg.place(f, shuffle_n)
     f = f.localCheckpoint(eager=True)
     verts.unpersist()
 
     for it in range(start_it, max_iter):
-        fv = F.broadcast(f) if can_broadcast else f
+        fv = rg.vector(f)
         # grandparent: gp[v] = f[f[v]]  (gp is dense: every vertex has one)
         gp = (
             fv.select("id", F.col("val").alias("_p"))
@@ -131,7 +129,7 @@ def connected_components(
         # mngp feeds BOTH the union-min and the hooks join; broadcast-
         # regime plans have no reusable exchange, so persist it to avoid
         # running the edge-sized SpMV twice inside the superstep job.
-        mngp = spmv(sym, gp, SELECT2ND_MIN, broadcast_vector=can_broadcast or None).persist()
+        mngp = spmv(sym, gp, SELECT2ND_MIN, broadcast_vector=rg.broadcast or None).persist()
         # hooking: push mngp[v] onto the parent f[v]
         hooks = (
             fv.select("id", F.col("val").alias("_p"))
@@ -168,7 +166,7 @@ def connected_components(
                       .cast("long")).alias("changed"))
             .select("id", "val")
         )
-        if small_vector:
+        if rg.small:
             new_f = new_f.coalesce(1)
         if runner is not None:
             new_f = runner.step(it, new_f)

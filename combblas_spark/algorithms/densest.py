@@ -46,14 +46,13 @@ from pyspark.storagelevel import StorageLevel
 from combblas_spark.portable import pround
 
 from combblas_spark.graph import symmetrize_partitioned, vertices
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import regime, superstep_checkpoint
 
 
 def densest_subgraph(
     edges: DataFrame,
     eps: float = 0.5,
     max_rounds: int = 64,
-    broadcast_max_vertices: int = 8_000_000,
     metrics: list | None = None,
 ) -> DataFrame:
     """Returns (id, round, n, m, density): the vertices of the densest
@@ -75,11 +74,7 @@ def densest_subgraph(
 
     verts = vertices(edges).select("id")
     n0 = verts.count()
-    can_broadcast = n0 <= broadcast_max_vertices
-    small = n0 <= 100_000
-
-    def _shape(df: DataFrame) -> DataFrame:
-        return df.coalesce(1) if small else df.repartition(shuffle_n, "id")
+    rg = regime(n0)
 
     out_schema = ("id", "round", "n", "m", "density")
     if n0 == 0:
@@ -88,13 +83,12 @@ def densest_subgraph(
             [], "id long, round int, n long, m long, density double")
         return empty.select(*out_schema)
 
-    alive = _shape(verts).localCheckpoint(eager=True)
+    alive = rg.place(verts, shuffle_n).localCheckpoint(eager=True)
     n_alive = n0
     best = None  # (raw_density, round, n, sum_deg, snapshot frame)
     converged = False
     for r in range(max_rounds):
-        av = alive.select("id")
-        bc = F.broadcast(av) if can_broadcast else av
+        bc = rg.vector(alive.select("id"))
         deg = (
             sym.join(bc.withColumnRenamed("id", "src"), "src", "left_semi")
             .groupBy(F.col("dst").alias("id"))
@@ -103,7 +97,7 @@ def densest_subgraph(
         )
         obs = Observation()
         deg = deg.observe(obs, F.coalesce(F.sum("_d"), F.lit(0)).alias("sum_d"))
-        deg = superstep_checkpoint(_shape(deg), r)
+        deg = superstep_checkpoint(rg.place(deg, shuffle_n), r)
         sum_d = int(obs.get["sum_d"])
         density = 0.5 * sum_d / n_alive  # exact mirror of the SQL twin
         if metrics is not None:
@@ -119,7 +113,7 @@ def densest_subgraph(
         new_alive = deg.filter(F.col("_d") > thr).select("id")
         obs2 = Observation()
         new_alive = new_alive.observe(obs2, F.count(F.lit(1)).alias("n"))
-        new_alive = superstep_checkpoint(_shape(new_alive), r)
+        new_alive = superstep_checkpoint(rg.place(new_alive, shuffle_n), r)
         n_next = int(obs2.get["n"])
         alive = new_alive
         n_alive = n_next

@@ -37,7 +37,7 @@ from pyspark.storagelevel import StorageLevel
 from combblas_spark.portable import pround
 
 from combblas_spark.graph import vertices
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import regime, superstep_checkpoint
 
 
 def projection_entry(idc: Column, j: int, seed: int) -> Column:
@@ -60,8 +60,6 @@ def fastrp(
     n_iter: int = 3,
     seed: int = 17,
     l2_normalized: bool = False,
-    broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
     overflow_check: str = "strict",
 ) -> DataFrame:
     """FastRP embeddings over IN-link adjacency powers.
@@ -123,9 +121,7 @@ def fastrp(
                 "overflow_check='off' to accept the worst-case-alignment "
                 "risk (the actual signed sums are typically far smaller)")
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    n = verts.count()
-    can_broadcast = n <= broadcast_max_vertices
-    small_vector = n <= small_vector_threshold
+    rg = regime(verts.count())
 
     xcols = [f"x{j}" for j in range(d)]
     acols = [f"e{j}" for j in range(d)]
@@ -135,24 +131,20 @@ def fastrp(
           for j, x in enumerate(xcols)],
         *[F.lit(0).cast("long").alias(a) for a in acols],
     )
-    state = state.coalesce(1) if small_vector else state.repartition(shuffle_n, "id")
-    state = state.localCheckpoint(eager=True)
+    state = rg.place(state, shuffle_n).localCheckpoint(eager=True)
 
     for it in range(n_iter):
         w = 1 << (n_iter - 1 - it)
         xv = state.select(F.col("id").alias("src"),
                           *[F.col(x).alias("_" + x) for x in xcols])
-        if can_broadcast:
-            xv = F.broadcast(xv)
         inflow = (
-            e.join(xv, "src")
+            e.join(rg.vector(xv), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(*[F.sum("_" + x).alias("i" + x) for x in xcols])
         )
-        stitched = F.broadcast(inflow) if small_vector else inflow
         newx = {x: F.coalesce(F.col("i" + x), F.lit(0)).cast("long") for x in xcols}
         state = superstep_checkpoint(
-            state.join(stitched, "id", "left").select(
+            state.join(rg.stitch(inflow), "id", "left").select(
                 "id",
                 *[newx[x].alias(x) for x in xcols],
                 *[(F.col(a) + F.lit(w) * newx[x]).alias(a)

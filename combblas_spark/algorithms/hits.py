@@ -21,6 +21,8 @@ then joins a broadcast vector against the copy whose partitioning
 already satisfies its aggregation -> ZERO edge-sized exchange per
 iteration in the broadcast regime; in the big-vector regime each copy
 pins its half-step's JOIN side so only vector-sized data moves.
+Measured 1.57x faster per iteration than one dst-partitioned copy
+(BENCH.md §9).
 
 L2 norms ride the half-step's checkpoint job as an ``Observation`` (no
 extra pass); the scalar re-enters the next plan as a literal — Python
@@ -38,16 +40,10 @@ from pyspark.storagelevel import StorageLevel
 from combblas_spark.portable import pround
 
 from combblas_spark.graph import vertices
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import regime, superstep_checkpoint
 
 
-def hits(
-    edges: DataFrame,
-    n_iter: int = 5,
-    broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
-    dual_layout: bool = True,
-) -> DataFrame:
+def hits(edges: DataFrame, n_iter: int = 5) -> DataFrame:
     """Returns (id, hub, auth) over the vertex set src UNION dst after
     ``n_iter`` synchronous iterations, each L2-normalized (vertices with
     no in-edges have auth 0; no out-edges -> hub 0). Fixed iteration
@@ -57,25 +53,15 @@ def hits(
     spark = edges.sparkSession
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
+    # dual layout: one copy per aggregation dimension (see module doc)
     e = edges.select("src", "dst")
-    # dual layout: one copy per aggregation dimension (see module doc).
-    # dual_layout=False is the A/B baseline: a single dst-partitioned
-    # copy, so the hub half-step's src aggregation pays an edge-sized
-    # exchange every iteration (measured in BENCH.md §9).
     e_dst = e.repartition(shuffle_n, "dst").persist(StorageLevel.MEMORY_AND_DISK)
     e_dst.count()
-    if dual_layout:
-        e_src = e.repartition(shuffle_n, "src").persist(StorageLevel.MEMORY_AND_DISK)
-        e_src.count()
-    else:
-        e_src = e_dst
+    e_src = e.repartition(shuffle_n, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    e_src.count()
 
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    n = verts.count()
-    can_broadcast = n <= broadcast_max_vertices
-
-    def _vec(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if can_broadcast else df
+    rg = regime(verts.count())
 
     def _half_step(edge_copy: DataFrame, vec: DataFrame, join_key: str,
                    agg_key: str, step_id: int) -> DataFrame:
@@ -84,7 +70,7 @@ def hits(
         pins the join side in the shuffle regime). Returns the
         L2-NORMALIZED sparse vector, checkpointed."""
         raw = (
-            edge_copy.join(_vec(vec), edge_copy[join_key] == vec["id"])
+            edge_copy.join(rg.vector(vec), edge_copy[join_key] == vec["id"])
             .groupBy(edge_copy[agg_key].alias("id"))
             .agg(F.sum("v").alias("v"))
         )
@@ -96,8 +82,7 @@ def hits(
             return raw
         return raw.select("id", (F.col("v") / F.lit(nrm)).alias("v"))
 
-    h = verts.select("id", F.lit(1.0).alias("v"))
-    h = h.coalesce(1) if n <= small_vector_threshold else h.repartition(shuffle_n, "id")
+    h = rg.place(verts.select("id", F.lit(1.0).alias("v")), shuffle_n)
     h = h.localCheckpoint(eager=True)
     a = None
     for it in range(n_iter):
@@ -119,18 +104,11 @@ def hits(
     out = out.localCheckpoint(eager=True)
     verts.unpersist()
     e_dst.unpersist()
-    if dual_layout:
-        e_src.unpersist()
+    e_src.unpersist()
     return out
 
 
-def katz(
-    edges: DataFrame,
-    alpha: float = 0.05,
-    n_iter: int = 5,
-    broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
-) -> DataFrame:
+def katz(edges: DataFrame, alpha: float = 0.05, n_iter: int = 5) -> DataFrame:
     """Katz centrality (Katz 1953) — the third classic link-analysis
     power iteration next to PageRank and HITS/SALSA: influence decays
     by ``alpha`` per hop along IN-links,
@@ -155,25 +133,19 @@ def katz(
         .persist(StorageLevel.MEMORY_AND_DISK)
     e.count()
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    n = verts.count()
-    can_broadcast = n <= broadcast_max_vertices
-    small_vector = n <= small_vector_threshold
+    rg = regime(verts.count())
 
-    x = verts.select("id", F.lit(1.0).alias("v"))
-    x = x.coalesce(1) if small_vector else x.repartition(shuffle_n, "id")
+    x = rg.place(verts.select("id", F.lit(1.0).alias("v")), shuffle_n)
     x = x.localCheckpoint(eager=True)
     for it in range(n_iter):
         xv = x.select(F.col("id").alias("src"), F.col("v").alias("_x"))
-        if can_broadcast:
-            xv = F.broadcast(xv)
         inflow = (
-            e.join(xv, "src")
+            e.join(rg.vector(xv), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("_x").alias("_in"))
         )
-        stitched = F.broadcast(inflow) if small_vector else inflow
         x = superstep_checkpoint(
-            verts.join(stitched, "id", "left").select(
+            verts.join(rg.stitch(inflow), "id", "left").select(
                 "id",
                 (F.lit(1.0)
                  + F.lit(alpha) * F.coalesce(F.col("_in"), F.lit(0.0))).alias("v"),
@@ -187,13 +159,7 @@ def katz(
     return out
 
 
-def salsa(
-    edges: DataFrame,
-    n_iter: int = 5,
-    broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
-    dual_layout: bool = True,
-) -> DataFrame:
+def salsa(edges: DataFrame, n_iter: int = 5) -> DataFrame:
     """SALSA (Lempel & Moran 2000) — the stochastic sibling of HITS:
 
         a(i) = sum_{j->i} h(j) / outdeg(j)     # a = Wr^T h
@@ -229,30 +195,22 @@ def salsa(
     ew = e.join(ind, "dst").join(outd, "src").select("src", "dst", "wc", "wr")
     e_dst = ew.repartition(shuffle_n, "dst").persist(StorageLevel.MEMORY_AND_DISK)
     e_dst.count()
-    if dual_layout:
-        e_src = ew.repartition(shuffle_n, "src").persist(StorageLevel.MEMORY_AND_DISK)
-        e_src.count()
-    else:
-        e_src = e_dst
+    e_src = ew.repartition(shuffle_n, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    e_src.count()
 
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    n = verts.count()
-    can_broadcast = n <= broadcast_max_vertices
-
-    def _vec(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if can_broadcast else df
+    rg = regime(verts.count())
 
     def _half_step(edge_copy: DataFrame, vec: DataFrame, join_key: str,
                    agg_key: str, wcol: str, step_id: int) -> DataFrame:
         raw = (
-            edge_copy.join(_vec(vec), edge_copy[join_key] == vec["id"])
+            edge_copy.join(rg.vector(vec), edge_copy[join_key] == vec["id"])
             .groupBy(edge_copy[agg_key].alias("id"))
             .agg(F.sum(F.col(wcol) * F.col("v")).alias("v"))
         )
         return superstep_checkpoint(raw, step_id)
 
-    h = verts.select("id", F.lit(1.0).alias("v"))
-    h = h.coalesce(1) if n <= small_vector_threshold else h.repartition(shuffle_n, "id")
+    h = rg.place(verts.select("id", F.lit(1.0).alias("v")), shuffle_n)
     h = h.localCheckpoint(eager=True)
     a = None
     for it in range(n_iter):
@@ -273,17 +231,11 @@ def salsa(
     out = out.localCheckpoint(eager=True)
     verts.unpersist()
     e_dst.unpersist()
-    if dual_layout:
-        e_src.unpersist()
+    e_src.unpersist()
     return out
 
 
-def eigencentrality(
-    edges: DataFrame,
-    n_iter: int = 8,
-    broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
-) -> DataFrame:
+def eigencentrality(edges: DataFrame, n_iter: int = 8) -> DataFrame:
     """Eigenvector centrality (Bonacich 1972) — the fourth classic
     link-analysis power iteration next to PageRank, HITS and Katz:
 
@@ -320,26 +272,19 @@ def eigencentrality(
         .persist(StorageLevel.MEMORY_AND_DISK)
     e.count()
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    rg = regime(verts.count())
 
-    n = verts.count()
-    can_broadcast = n <= broadcast_max_vertices
-    small_vector = n <= small_vector_threshold
-
-    x = verts.select("id", F.lit(1.0).alias("v"))
-    x = x.coalesce(1) if small_vector else x.repartition(shuffle_n, "id")
+    x = rg.place(verts.select("id", F.lit(1.0).alias("v")), shuffle_n)
     x = x.localCheckpoint(eager=True)
     for it in range(n_iter):
         xv = x.select(F.col("id").alias("src"), F.col("v").alias("_x"))
-        if can_broadcast:
-            xv = F.broadcast(xv)
         inflow = (
-            e.join(xv, "src")
+            e.join(rg.vector(xv), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("_x").alias("_in"))
         )
-        stitched = F.broadcast(inflow) if small_vector else inflow
         x = superstep_checkpoint(
-            verts.join(stitched, "id", "left").select(
+            verts.join(rg.stitch(inflow), "id", "left").select(
                 "id",
                 (F.coalesce(F.col("_in"), F.lit(0.0)) / F.lit(16.0)).alias("v"),
             ),

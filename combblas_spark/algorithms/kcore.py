@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.graph import symmetrize_partitioned, vertices
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import regime, superstep_checkpoint
 
 
 def _peel_loop(
@@ -38,7 +38,6 @@ def _peel_loop(
     threshold,
     op_name: str,
     max_rounds: int,
-    broadcast_max_vertices: int,
     metrics: list | None,
 ) -> DataFrame:
     """Shared threshold-peel driver for k_core / s_core: iterate
@@ -55,18 +54,13 @@ def _peel_loop(
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     verts = vertices(edges).select("id")
     n0 = verts.count()
-    can_broadcast = n0 <= broadcast_max_vertices
-    small = n0 <= 100_000
+    rg = regime(n0)
 
-    def _shape(df: DataFrame) -> DataFrame:
-        return df.coalesce(1) if small else df.repartition(shuffle_n, "id")
-
-    alive = _shape(verts).localCheckpoint(eager=True)
+    alive = rg.place(verts, shuffle_n).localCheckpoint(eager=True)
     prev_n = None
     converged = n0 == 0
     for r in range(max_rounds):
-        av = alive.select(F.col("id"))
-        bc = F.broadcast(av) if can_broadcast else av
+        bc = rg.vector(alive.select(F.col("id")))
         # aggregate within the alive-induced subgraph: both endpoints
         # alive. semi-join on src first (filters the edge stream), dst
         # filter rides the aggregation's own key via the post-agg
@@ -80,7 +74,7 @@ def _peel_loop(
         new_alive = agg.filter(F.col("_d") >= threshold).select("id")
         obs = Observation()
         new_alive = new_alive.observe(obs, F.count(F.lit(1)).alias("n"))
-        new_alive = superstep_checkpoint(_shape(new_alive), r)
+        new_alive = superstep_checkpoint(rg.place(new_alive, shuffle_n), r)
         n_alive = int(obs.get["n"])
         if metrics is not None:
             metrics.append({"round": r, "alive": n_alive})
@@ -105,7 +99,6 @@ def k_core(
     edges: DataFrame,
     k: int,
     max_rounds: int = 100,
-    broadcast_max_vertices: int = 8_000_000,
     metrics: list | None = None,
 ) -> DataFrame:
     """Returns (id) — the vertices of the k-core of the undirected,
@@ -120,7 +113,7 @@ def k_core(
     )
     sym.count()
     return _peel_loop(edges, sym, F.count(F.lit(1)), k, "k_core",
-                      max_rounds, broadcast_max_vertices, metrics)
+                      max_rounds, metrics)
 
 
 def s_core(
@@ -128,7 +121,6 @@ def s_core(
     s: int,
     weight_col: str | None = None,
     max_rounds: int = 100,
-    broadcast_max_vertices: int = 8_000_000,
     metrics: list | None = None,
 ) -> DataFrame:
     """Weighted k-core ("s-core", Eidsaa & Almaas, PRL 2013): the
@@ -179,13 +171,12 @@ def s_core(
                 f"values (min {mn}); the peel is only correct for "
                 "non-negative weights")
     return _peel_loop(edges, sym, F.sum("w"), s, "s_core",
-                      max_rounds, broadcast_max_vertices, metrics)
+                      max_rounds, metrics)
 
 
 def core_numbers(
     edges: DataFrame,
     max_iters: int = 100,
-    broadcast_max_vertices: int = 8_000_000,
     metrics: list | None = None,
 ) -> DataFrame:
     """Full coreness decomposition (id, core) via distributed h-index
@@ -218,12 +209,10 @@ def core_numbers(
     )
     prev_s = int(core.agg(F.sum("core")).collect()[0][0] or 0)
 
-    can_broadcast = core.count() <= broadcast_max_vertices
+    rg = regime(core.count())
     converged = prev_s == 0
     for t in range(max_iters):
-        cv = core.select(F.col("id").alias("src"), F.col("core").alias("_c"))
-        if can_broadcast:
-            cv = F.broadcast(cv)
+        cv = rg.vector(core.select(F.col("id").alias("src"), F.col("core").alias("_c")))
         w = Window.partitionBy("dst").orderBy(F.col("_c").desc())
         new_core = (
             sym.join(cv, "src")

@@ -4,9 +4,9 @@ Not in the reference (north rule requires it); expressed as the "most
 frequent neighbor label" semiring from SURVEY.md §2.6: a mode/argmax
 aggregate is not a single Spark agg, so it is the documented two-stage
 groupBy (count per (vertex,label)) + per-vertex argmax — a hash-agg
-`min_by(label, struct(-count, label))` by default (`argmax="window"`
-keeps the row_number variant; A/B in BENCH.md) — with a deterministic
-min-label tie-break, which keeps results EXACT and
+`min_by(label, struct(-count, label))` (1.5-5x faster than a
+row_number window at RMAT-18, BENCH.md round-4) — with a
+deterministic min-label tie-break, which keeps results EXACT and
 SQL-oracle-comparable.
 
 Rounds are synchronous and fixed-count (n_rounds) so the DuckDB oracle
@@ -15,8 +15,8 @@ can unroll the identical recurrence.
 Scale design (same recipe as pagerank.py, measured there):
 * sym edges pre-partitioned ONCE by dst — the per-round count-agg
   groups by (dst, label), and HashPartitioning(dst) satisfies that
-  clustering, so no edge-sized exchange per round; the argmax window
-  (partitionBy id=dst) reuses the same partitioning.
+  clustering, so no edge-sized exchange per round; the min_by argmax
+  (group key id=dst) reuses the same partitioning.
 * the label vector is broadcast into the join while it fits; the final
   stitch is a broadcast (small n) or co-partitioned (large n) join.
 * resumable via runtime.SuperstepRunner (state = the label vector).
@@ -32,7 +32,7 @@ from pyspark.storagelevel import StorageLevel
 
 from combblas_spark.portable import pround
 
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import regime, superstep_checkpoint
 from combblas_spark.graph import symmetrize_partitioned, vertices
 
 
@@ -40,11 +40,9 @@ def label_propagation(
     edges: DataFrame,
     n_rounds: int = 5,
     metrics: list | None = None,
-    broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
+    broadcast_max_vertices: int | None = None,
     runner=None,
     seeds: DataFrame | None = None,
-    argmax: str = "min_by",
 ) -> DataFrame:
     """Returns (id, label). Initial label = vertex id; each round every
     vertex adopts the most frequent label among its (undirected)
@@ -70,9 +68,7 @@ def label_propagation(
     # cache the vertex set: its count decides the regime AND it seeds the
     # labels — without the persist the union+distinct runs twice
     verts = vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    n = verts.count()
-    can_broadcast = n <= broadcast_max_vertices
-    small_vector = n <= small_vector_threshold
+    rg = regime(verts.count(), broadcast_max_vertices)
 
     start_r = 0
     labels = None
@@ -89,7 +85,7 @@ def label_propagation(
                 "id", F.col("_sl").alias("label"), "_sl")
         else:
             labels = verts.select("id", F.col("id").alias("label"))
-        labels = labels.coalesce(1) if small_vector else labels.repartition(shuffle_n, "id")
+        labels = rg.place(labels, shuffle_n)
     labels = labels.localCheckpoint(eager=True)
     verts.unpersist()
 
@@ -98,39 +94,24 @@ def label_propagation(
         if seeded:
             # unlabeled vertices don't vote
             lv = lv.where(F.col("label").isNotNull())
-        if can_broadcast:
-            lv = F.broadcast(lv)
         # count-per-(vertex,label): HashPartitioning(dst) satisfies the
         # (dst,label) clustering -> no edge-sized exchange; the argmax
-        # window then reuses the same id partitioning
+        # then reuses the same id partitioning
         nbr = (
-            sym.join(lv, "src")
+            sym.join(rg.vector(lv), "src")
             .groupBy(F.col("dst").alias("id"), "label")
             .agg(F.count(F.lit(1)).alias("_c"))
         )
-        if argmax == "min_by":
-            # min_by argmax (default): lexicographic min of
-            # (-count, label) == (max count, then min label) — identical
-            # tie-break to the window variant. Plans as an exchange-free
-            # SortAggregate whose sort is on the GROUP KEY ONLY, vs the
-            # window's 3-column sort + row_number; partial min_by
-            # collapses each partition's votes to one row per id.
-            # A/B at RMAT-18: 0.20-0.67x the window round (BENCH.md
-            # round-4 "labelprop argmax"); equality asserted per run
-            # by scripts/labelprop_argmax_bench.py.
-            best = (
-                nbr.groupBy("id")
-                .agg(F.min_by("label", F.struct((-F.col("_c")).alias("_nc"),
-                                                F.col("label"))).alias("_new"))
-            )
-        else:
-            w = Window.partitionBy("id").orderBy(F.col("_c").desc(), F.col("label").asc())
-            best = (
-                nbr.withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") == 1)
-                .select("id", F.col("label").alias("_new"))
-            )
-        stitched = F.broadcast(best) if small_vector else best
+        # argmax: lexicographic min of (-count, label) == (max count,
+        # then min label). Plans as an exchange-free SortAggregate whose
+        # sort is on the GROUP KEY ONLY; partial min_by collapses each
+        # partition's votes to one row per id.
+        best = (
+            nbr.groupBy("id")
+            .agg(F.min_by("label", F.struct((-F.col("_c")).alias("_nc"),
+                                            F.col("label"))).alias("_new"))
+        )
+        stitched = rg.stitch(best)
         if seeded:
             # clamp seeds; unlabeled vertices adopt the vote if any
             new_labels = (
@@ -309,8 +290,6 @@ def _modularity_local_phase(
 
     Returns (id, c).
     """
-    from combblas_spark.runtime.plans import superstep_checkpoint
-
     degn = sym.groupBy(F.col("src").alias("id")).agg(
         F.sum("w").alias("_dw"))
     if loops is not None:

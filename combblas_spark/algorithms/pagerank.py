@@ -23,8 +23,9 @@ BENCH/BASELINE.md):
 * the rank vector is broadcast into the SpMV join while it fits
   (driver-side density heuristic, the analogue of the reference's
   adaptive AllGather-vs-Alltoall choice, FastSV.h:252-333, CC.h:1251);
-  beyond ``broadcast_max_vertices`` it becomes a shuffle join against
-  edges pre-partitioned by src, planned by AQE (skew-join enabled).
+  beyond the regime's broadcast threshold (runtime.plans.regime) it
+  becomes a shuffle join against edges pre-partitioned by src, planned
+  by AQE (skew-join enabled).
 * the groupBy(dst).sum is THE communication step; map-side partial
   aggregation absorbs in-degree skew (hub pages) exactly like the
   reference's tree-reduce.
@@ -45,7 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import regime, superstep_checkpoint
 
 
 def pagerank(
@@ -56,19 +57,22 @@ def pagerank(
     max_iter: int = 100,
     weighted: bool = False,
     metrics: list | None = None,
-    broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
+    broadcast_max_vertices: int | None = None,
+    small_vector_threshold: int | None = None,
     runner=None,
     initial_ranks: DataFrame | None = None,
     edge_layout: str | None = None,
     teleport: DataFrame | None = None,
-    loop_layout: str | None = None,
 ) -> DataFrame:
     """Returns (id, rank) over the vertex set src UNION dst.
 
     n_iter set -> EXACTLY that many synchronous iterations (used by the
     DuckDB oracle, which unrolls the same recurrence); tol set -> run to
     L1 convergence (used by correctness-vs-numpy tests and bench).
+
+    ``broadcast_max_vertices`` / ``small_vector_threshold`` override the
+    placement regime's thresholds (runtime.plans.regime; None keeps
+    the module defaults) — e.g. 0 forces the shuffle regime.
 
     ``teleport`` switches to PERSONALIZED PageRank: a (id, weight)
     DataFrame of non-negative restart weights (any second column name;
@@ -142,24 +146,21 @@ def pagerank(
         base0.unpersist()
     else:
         n = base.count()
-    can_broadcast = n <= broadcast_max_vertices
     # Small vectors collapse to one partition (tiny-stage overhead
     # dominates otherwise); bigger vectors stay hash-partitioned by id at
     # shuffle width so every vector stage parallelizes AND the per-
     # superstep state<->inflow join is co-partitioned (zero exchange).
-    small_vector = n <= small_vector_threshold
+    rg = regime(n, broadcast_max_vertices, small_vector_threshold)
 
     w = F.col("val") if weighted and "val" in edges.columns else F.lit(1.0)
     outw = edges.groupBy("src").agg(F.sum(w).alias("_outw"))
     enorm = edges.join(outw, "src").select("src", "dst", (w / F.col("_outw")).alias("w"))
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # loop_layout FORCES the cached-edge partitioning for the superstep
-    # loop (A/B instrumentation, VERDICT r3 #2): "src" pins the SpMV
-    # join side (default in the shuffle regime), "dst" pins the
-    # aggregation side (default in the broadcast regime, where the join
-    # is a broadcast and free). Results are layout-invariant; only the
-    # exchange placement moves. Leave None outside experiments.
-    regime_key = loop_layout or ("dst" if can_broadcast else "src")
+    # cached-edge partitioning for the superstep loop: the aggregation
+    # key (dst) in the broadcast regime, where the join is a broadcast
+    # and free; the join key (src) in the shuffle regime. Pinning dst in
+    # the shuffle regime measured 3.49x worse (BENCH.md round-4).
+    regime_key = "dst" if rg.broadcast else "src"
     if edge_layout == regime_key == "src":
         # caller declared the input already partitioned on the regime
         # key (bucketed table) — keep its layout; the normalize join
@@ -171,16 +172,11 @@ def pagerank(
         # superstep of the broadcast regime — fall through instead.
         pass
     elif regime_key == "dst":
-        # broadcast regime default (or loop_layout="dst" override):
-        # pre-partition edges by the AGGREGATION key (dst). The
-        # per-superstep SpMV is then a broadcast join + an agg whose
-        # partitioning is already satisfied -> ZERO exchanges inside
-        # the loop; only the small rank vector moves (the SUMMA
+        # broadcast regime: pre-partition edges by the AGGREGATION key
+        # (dst). The per-superstep SpMV is then a broadcast join + an
+        # agg whose partitioning is already satisfied -> ZERO exchanges
+        # inside the loop; only the small rank vector moves (the SUMMA
         # analogue: blocks stay put, the vector is the allgather).
-        # NOTE: branching must be on regime_key, not can_broadcast —
-        # the original branch ignored loop_layout entirely, so the
-        # first round-4 dual-layout A/B compared src against src
-        # (caught in review; re-measured after this fix, BENCH.md).
         enorm = enorm.repartition(shuffle_n, "dst")
     else:
         # big-vector regime: pin the edge partitioning to the JOIN key
@@ -222,7 +218,7 @@ def pagerank(
             state = base.select("id", F.col("tp").alias("rank"), "dg", "tp")
         else:
             state = base.select("id", F.lit(1.0 / n).alias("rank"), "dg")
-        state = state.coalesce(1) if small_vector else state.repartition(shuffle_n, "id")
+        state = rg.place(state, shuffle_n)
     state = state.localCheckpoint(eager=True)
     base.unpersist()
 
@@ -247,7 +243,7 @@ def pagerank(
                 * (F.coalesce(F.col("_in"), F.lit(0.0)) + F.col("_dm") / F.lit(float(n)))
             ).alias("rank")
 
-        if can_broadcast:
+        if rg.broadcast:
             # zero-exchange SpMV: broadcast join + partitioning-satisfied
             # agg over the dst-partitioned cached edges. The vector-sized
             # inflow is stitched back onto the state either by a second
@@ -260,9 +256,8 @@ def pagerank(
                 .groupBy("id")
                 .agg(F.sum("_c").alias("_in"))
             )
-            stitched = F.broadcast(inflow) if small_vector else inflow
             new_state = (
-                state.join(stitched, "id", "left")
+                state.join(rg.stitch(inflow), "id", "left")
                 .crossJoin(F.broadcast(dmass))
                 .select("id", F.col("rank").alias("_prev"), new_rank, "dg", *extra)
             )
@@ -327,8 +322,6 @@ def pagerank_batch(
     alpha: float = 0.85,
     n_iter: int = 10,
     weighted: bool = False,
-    broadcast_max_vertices: int = 8_000_000,
-    small_vector_threshold: int = 100_000,
 ) -> DataFrame:
     """Batched single-seed personalized PageRank: B seed vertices share
     ONE power-iteration loop by carrying the rank vector as an
@@ -378,16 +371,14 @@ def pagerank_batch(
         raise ValueError(
             f"pagerank_batch: {B - present} seed id(s) not in the graph's "
             "vertex set (their chains would be identically zero)")
-    can_broadcast = n <= broadcast_max_vertices
-    small_vector = n <= small_vector_threshold
+    rg = regime(n)
 
     w = F.col("val") if weighted and "val" in edges.columns else F.lit(1.0)
     outw = edges.groupBy("src").agg(F.sum(w).alias("_outw"))
     enorm = edges.join(outw, "src").select(
         "src", "dst", (w / F.col("_outw")).alias("w"))
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    enorm = (enorm.repartition(shuffle_n, "dst") if can_broadcast
-             else enorm.repartition(shuffle_n, "src"))
+    enorm = enorm.repartition(shuffle_n, "dst" if rg.broadcast else "src")
     enorm = enorm.persist(StorageLevel.MEMORY_AND_DISK)
     enorm.count()
 
@@ -396,8 +387,7 @@ def pagerank_batch(
 
     state = base.select(
         "id", F.array(*[_t(b) for b in range(B)]).alias("ranks"), "dg")
-    state = state.coalesce(1) if small_vector else state.repartition(shuffle_n, "id")
-    state = state.localCheckpoint(eager=True)
+    state = rg.place(state, shuffle_n).localCheckpoint(eager=True)
     base.unpersist()
 
     for it in range(n_iter):
@@ -407,15 +397,14 @@ def pagerank_batch(
             for b in range(B)
         ]).alias("_dm"))
         rv = state.select(F.col("id").alias("_rid"), F.col("ranks").alias("_r"))
-        rv = F.broadcast(rv) if can_broadcast else rv
         inflow = (
-            enorm.join(rv, enorm["src"] == F.col("_rid"))
+            enorm.join(rg.vector(rv), enorm["src"] == F.col("_rid"))
             .select(F.col("dst").alias("id"),
                     F.transform("_r", lambda x: x * F.col("w")).alias("_c"))
             .groupBy("id")
             .agg(F.array(*[F.sum(F.col("_c")[b]) for b in range(B)]).alias("_in"))
         )
-        stitched = F.broadcast(inflow) if (can_broadcast and small_vector) else inflow
+        stitched = rg.stitch(inflow) if rg.broadcast else inflow
         new_ranks = F.array(*[
             F.lit(1.0 - alpha) * _t(b)
             + F.lit(alpha) * (F.coalesce(F.col("_in")[b], F.lit(0.0))

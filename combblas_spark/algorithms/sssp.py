@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from combblas_spark.runtime.plans import superstep_checkpoint
+from combblas_spark.runtime.plans import regime, superstep_checkpoint
 
 
 def sssp(
@@ -27,7 +27,6 @@ def sssp(
     directed: bool = True,
     metrics: list | None = None,
     runner=None,
-    broadcast_max_vertices: int = 8_000_000,
 ) -> DataFrame:
     """Returns (id, dist) for vertices reachable from ``root``.
 
@@ -35,11 +34,12 @@ def sssp(
     weighted=False). Distances follow edge direction src->dst unless
     directed=False (symmetrized first).
 
-    The frontier is broadcast into the relax join only while it holds at
-    most ``broadcast_max_vertices`` rows (same gate as pagerank /
-    components); above that — near-diameter steps on dense graphs, or a
-    resume where the frontier is the whole distance vector — it falls
-    back to a shuffle join against the dst-partitioned cached edges.
+    The frontier is broadcast into the relax join only while the
+    regime's broadcast threshold admits it (runtime.plans.regime, the
+    gate pagerank / components use); above that — near-diameter steps
+    on dense graphs, or a resume where the frontier is the whole
+    distance vector — it falls back to a shuffle join against the
+    dst-partitioned cached edges.
     """
     spark = edges.sparkSession
     w = F.col("val") if weighted and "val" in edges.columns else F.lit(1.0)
@@ -68,8 +68,7 @@ def sssp(
     for it in range(start_it, max_iter):
         # SpMSpV over MinPlus: relax out-edges of the frontier only.
         # Broadcast only while the frontier is provably small.
-        f_in = (F.broadcast(frontier) if n_front <= broadcast_max_vertices
-                else frontier)
+        f_in = regime(n_front).vector(frontier)
         relaxed = (
             e.join(f_in.withColumnRenamed("id", "_fid"),
                    e["src"] == F.col("_fid"))
@@ -129,7 +128,6 @@ def delta_stepping_sssp(
     max_buckets: int = 100_000,
     max_inner: int = 200,
     metrics: list | None = None,
-    broadcast_max_vertices: int = 8_000_000,
 ) -> DataFrame:
     """Delta-stepping SSSP (Meyer & Sanders 2003) — returns the same
     (id, dist) fixpoint as sssp(), reached in far fewer supersteps on
@@ -175,8 +173,7 @@ def delta_stepping_sssp(
                n_front: int) -> DataFrame:
         """One MinPlus relaxation + merge; returns the new dist vector
         (same union-agg shape as sssp)."""
-        f_in = (F.broadcast(frontier) if n_front <= broadcast_max_vertices
-                else frontier)
+        f_in = regime(n_front).vector(frontier)
         relaxed = (
             edge_side.join(f_in.withColumnRenamed("id", "_fid"),
                            edge_side["src"] == F.col("_fid"))

@@ -53,6 +53,12 @@ def sweep_cut(
     round(score,12)/deg descending (id tie-break). Rows cover
     0 <= pos <= n-2 (the full-set prefix has no complement); vertices
     missing from ``scores`` sweep last with score 0.
+
+    Precondition: |score| < ~9.2e6. The 12dp key multiplies by 1e12,
+    and past |score| * 1e12 >= 2^63 Spark's floor saturates to LONG
+    where DuckDB's does not (portable.pround), so the two engines'
+    sweep orders diverge. Probability-mass scores (PPR, PageRank, PIC)
+    sit far below it; rescale larger scores before sweeping.
     """
     from combblas_spark.operators.indexing import prefix_sum, zip_with_index
 

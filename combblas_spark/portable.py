@@ -2,9 +2,12 @@
 
 ``round(x, nd)`` on doubles has engine- and version-specific tie
 behavior (Spark rounds HALF_UP via BigDecimal; DuckDB's double
-``round`` has changed semantics across releases — the round-4 driver
-reds ``dup_spans`` / ``tf_cosine`` were exactly this divergence, both
-bit-exact against DuckDB 1.0.0 locally).  ``floor(x*10^nd + 0.5) /
+``round`` has changed semantics across releases).  The form below
+removes that class of divergence by construction.  (It was once
+blamed for the hash-only oracle mismatches ``dup_spans`` / ``tf_cosine`` /
+``butterflies`` / ``sweep_cut``; their cause was DuckDB ``sum(BIGINT)``
+returning HUGEINT in the twins, a column type Spark never emits — the
+twins now cast those sums to BIGINT.)  ``floor(x*10^nd + 0.5) /
 10^nd`` is a composition of individually correctly-rounded IEEE-754
 ops (multiply, add, floor, divide), so ANY two IEEE engines produce
 the SAME double for the same input — and it is value-identical to
@@ -31,8 +34,15 @@ def pround(c: Column | str, nd: int = 6) -> Column:
     so past ``|x| * 10^nd >= 2^63`` (|x| ~ 9.2e12 at nd=6) Spark
     saturates where DuckDB's double ``floor`` does not — between 2^53
     and 2^63 both engines agree (an integral double ≥ 2^53 round-trips
-    the long conversion exactly), above 2^63 they diverge.  No output
-    column here approaches that (fractions/scores/ranks ≤ O(1e9))."""
+    the long conversion exactly), above 2^63 they diverge.  Per ``nd``
+    (exact below 2^53 / 10^nd, engines agree below 2^63 / 10^nd):
+
+        nd = 3:   |x| < ~9.0e12 exact,  < ~9.2e15 agree
+        nd = 6:   |x| < ~9.0e9  exact,  < ~9.2e12 agree
+        nd = 12:  |x| < ~9.0e3  exact,  < ~9.2e6  agree (sweep_cut key)
+
+    No 6dp output column here approaches its bound (fractions/scores/
+    ranks ≤ O(1e9))."""
     s = F.lit(float(10 ** nd))
     c = F.col(c) if isinstance(c, str) else c
     return F.floor(c.cast("double") * s + F.lit(0.5)) / s

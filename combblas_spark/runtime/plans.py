@@ -35,10 +35,59 @@ motivated all this stays fast (tests/test_runtime.py).
 from __future__ import annotations
 
 import warnings
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 STATS_RESET_BITS = 8192
+
+# Vector-placement regime — the ONE place the engine decides how a
+# vertex-sized vector meets the cached edges (the reference's adaptive
+# AllGather-vs-Alltoall choice, FastSV.h:252-333, CC.h:1251):
+# * up to BROADCAST_MAX_VERTICES rows the vector is broadcast into the
+#   edge join (the allgather; the edge side never moves);
+# * beyond it the vector shuffles to meet edges pinned on the join key;
+# * up to SMALL_VECTOR_THRESHOLD rows the vector collapses to one
+#   partition (65k rows in 64 partitions is pure scheduling overhead;
+#   measured 4x superstep cost at RMAT-12) and vector-sized stitch
+#   joins broadcast; larger vectors stay HashPartitioning(id, shuffle
+#   width) so the per-superstep state<->inflow join is co-partitioned.
+# regime() reads both constants at call time, so a test can force the
+# shuffle regime everywhere by setting them to 0.
+BROADCAST_MAX_VERTICES = 8_000_000
+SMALL_VECTOR_THRESHOLD = 100_000
+
+
+class Regime(NamedTuple):
+    """Placement decision for one vertex-sized vector."""
+
+    broadcast: bool
+    small: bool
+
+    def place(self, df: DataFrame, shuffle_n: int) -> DataFrame:
+        """The state vector's layout: one partition when small, else
+        hash-partitioned by id at shuffle width."""
+        return df.coalesce(1) if self.small else df.repartition(shuffle_n, "id")
+
+    def vector(self, df: DataFrame) -> DataFrame:
+        """The vector side of an edge join: broadcast while it fits."""
+        return F.broadcast(df) if self.broadcast else df
+
+    def stitch(self, df: DataFrame) -> DataFrame:
+        """A vector-sized join side: broadcast only when small."""
+        return F.broadcast(df) if self.small else df
+
+
+def regime(n: int, broadcast_max_vertices: int | None = None,
+           small_vector_threshold: int | None = None) -> Regime:
+    """Placement regime for a vector of ``n`` rows. A threshold left
+    None takes the module constant's value at call time."""
+    if broadcast_max_vertices is None:
+        broadcast_max_vertices = BROADCAST_MAX_VERTICES
+    if small_vector_threshold is None:
+        small_vector_threshold = SMALL_VECTOR_THRESHOLD
+    return Regime(n <= broadcast_max_vertices, n <= small_vector_threshold)
 
 _warned_fallback = False
 

@@ -61,9 +61,10 @@ def main() -> None:
     p.add_argument("--checkpoint-every", type=int, default=5)
     p.add_argument("--output", default=None, help="parquet dir for the result vector")
     p.add_argument(
-        "--broadcast-max-vertices", type=int, default=8_000_000,
-        help="0 forces the shuffle regime — the code path a 10^12-vertex "
-             "run would take (rank vector too big to broadcast)")
+        "--broadcast-max-vertices", type=int, default=None,
+        help="default: the engine's regime threshold; 0 forces the "
+             "shuffle regime — the code path a 10^12-vertex run would "
+             "take (rank vector too big to broadcast)")
     p.add_argument(
         "--partition-stats", action="store_true",
         help="record the per-partition row histogram + load-imbalance "

@@ -224,9 +224,15 @@ def test_bin_mtx_cross_format(spark, tmp_path):
     """.mtx -> write_bin -> read_bin equals the original .mtx triples
     (binary interchange for existing CombBLAS datasets, Mtx2Bin.cpp)."""
     from combblas_spark.sources.bin import read_bin, write_bin
-    from combblas_spark.sources.mm import read_mm
 
-    e, m, n = read_mm(spark, "/root/reference/ReleaseTests/sevenvertex.mtx")
+    triples = [(0, 1, 1.0), (0, 3, 2.5), (1, 4, -1.0), (1, 6, 0.5),
+               (2, 5, 3.0), (3, 0, 1.0), (3, 2, 4.0), (4, 5, 0.25),
+               (5, 2, 1.5), (6, 3, 2.0), (6, 6, 7.0)]
+    mtx = str(tmp_path / "seven.mtx")
+    write_mm(df_edges(spark, triples), mtx, nrows=7, ncols=7)
+    e, m, n = read_mm(spark, mtx)
+    assert (m, n) == (7, 7)
+    assert sorted(map(tuple, e.collect())) == triples
     p = str(tmp_path / "x.bin")
     write_bin(e, p, nrows=m, ncols=n)
     back, bm, bn = read_bin(spark, p)
